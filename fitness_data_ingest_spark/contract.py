@@ -30,8 +30,7 @@ def _family_dicts() -> list[tuple[str, dict]]:
 
 def _first_green_rounds() -> dict[str, int]:
     """key -> earliest round with a fully-green (rows+schema+hash)
-    driver verdict. Mirrors registry._driver_verified but keeps the
-    round number."""
+    driver verdict."""
     here = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
     first: dict[str, int] = {}
     for path in sorted(glob.glob(os.path.join(here, "CORRECTNESS_r*.json"))):
@@ -67,9 +66,7 @@ def contract_rows() -> list[dict[str, str]]:
     green = _first_green_rounds()
     rows = []
     aq = R.all_queries()
-    # alphabetical, NOT rotation order: the rotation reorders itself as
-    # CORRECTNESS rounds land, and the checked-in table must stay
-    # byte-stable between regenerations within a round
+    # alphabetical, independent of family registration order
     for key in sorted(aq):
         q = aq[key]
         tags = getattr(q, "tags", ()) or ()
@@ -99,8 +96,8 @@ def render_markdown() -> str:
         f"{len(rows)} registered keys — {n_hash} DuckDB-hash-oracle-paired, "
         f"{len(rows) - n_hash} rows-only by design; {n_green} lifetime "
         "driver-green ('verified' = first round whose driver window "
-        "hash-verified the key; 'queued' = oracle-paired, awaiting its "
-        "first window slot). Rows are alphabetical by key.",
+        "hash-verified the key; 'queued' = oracle-paired, no recorded "
+        "driver verdict yet). Rows are alphabetical by key.",
         "",
         "| # | key | module | family | oracle | verified |",
         "|---|-----|--------|--------|--------|----------|",

@@ -93,7 +93,7 @@ def minhash_signature_array(hash_col: Column, n: int = MINHASH_K) -> Column:
     constants INLINED per permutation — constant-folded by codegen, no
     per-row literal-array allocation (an element_at-over-literal-array
     variant measured ~4× slower at sf0.1). Cold-compile cost of the wide
-    expression is amortized by warmup (bench.py warms every plan).
+    expression is amortized by warming the plan once per session.
 
     ONE fold over the shingle array with an n-long running-min
     accumulator (same single-pass discipline as :func:`simhash`): the
@@ -268,9 +268,9 @@ def minhash_estimate_vs_exact(
     because three branches consume it (the band join and both pair
     sides) and the result is returned LAZILY, so this function cannot
     unpersist it itself. In a long-lived session, repeated calls
-    accumulate cached partitions until ``spark.catalog.clearCache()``
-    (bench.py clears between queries); one-shot driver/oracle runs drop
-    it with the session. Same contract as the other internal persists
+    accumulate cached partitions until the caller runs
+    ``spark.catalog.clearCache()``; one-shot driver/oracle runs drop it
+    with the session. Same contract as the other internal persists
     in this module and ``ops/graph.py``.
     """
     sig = with_minhash(docs, id_col, text_col)

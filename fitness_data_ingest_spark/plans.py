@@ -217,11 +217,9 @@ def normalize_plan(plan: str) -> str:
 
 def plan_fingerprint(df: DataFrame) -> str:
     """16-hex-digit digest of the normalized physical plan. The change
-    detector behind PLANHASH.json: a driver-green query whose
-    fingerprint moves has had a PLAN REWRITE and must re-enter the
-    verification window (registry._FORCE_REVERIFY) — the round-4 lesson
-    that silent rewrites invalidate recorded correctness rows, made
-    structural."""
+    detector behind PLANHASH.json: a query whose fingerprint moves has
+    had a plan rewrite, which tests/test_plans.py reports so the
+    baseline is regenerated deliberately, never silently."""
     import hashlib
 
     norm = normalize_plan(_explain(df, "formatted"))

@@ -941,9 +941,9 @@ def _scalar_battery(spark, sf_dir):
 
 
 # ------------------------------------------------ TPC-H-style headliners
-# Classic analytical shapes over the fixture star schema — the bench.py
-# anchors. Aggregates use exact integer-cents sums so cross-engine
-# ordering (Q3 top-10) is deterministic.
+# Classic analytical shapes over the fixture star schema. Aggregates
+# use exact integer-cents sums so cross-engine ordering (Q3 top-10) is
+# deterministic.
 
 
 def _tpch_q1(spark, sf_dir):

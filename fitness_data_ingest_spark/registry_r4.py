@@ -2,11 +2,6 @@
 interpolation, integer-exact higher moments, and the MinHash
 sketch-accuracy audit.
 
-These queue BEHIND the round-3 verification backlog in the driver
-rotation (registry.py _NEXT_ROTATION): the round-4 window is reserved
-for the 44 never-driver-verified keys first; anything here that does
-not fit rides into round 5 automatically.
-
 Reference parity note: the reference repo (pandas/requests ETL) has
 none of these surfaces; they extend the engine along the
 training-data-pipeline axis (SURVEY.md §2 extensions) and the Spark-4

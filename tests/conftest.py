@@ -18,6 +18,10 @@ def spark():
         app_name="fdis-tests",
         master=f"local[{os.environ.get('SPARK_GRAFT_CPUS', '8')}]",
         shuffle_partitions=8,
+        # Some plans embed sparkContext.defaultParallelism (range splits,
+        # repartition counts); PLANHASH.json is recorded at 8, so pin it
+        # independently of the local[N] core count.
+        extra_conf={"spark.default.parallelism": "8"},
     )
     yield spark
 

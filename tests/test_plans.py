@@ -835,14 +835,9 @@ def test_plan_fingerprints_match_baseline(
     registry_plan_artifacts, sf_dir
 ):
     """Every registry key's normalized physical-plan hash must equal the
-    committed PLANHASH.json baseline (verdict r4 item 5, made
-    structural): a driver-green key whose plan moves without a
-    _FORCE_REVERIFY entry would keep a STALE green correctness row —
-    the exact failure mode this repo hand-audited in rounds 3-4.
+    committed PLANHASH.json baseline, so no key's plan moves unnoticed.
 
-    On an intentional rewrite: add/refresh the key in
-    registry._FORCE_REVERIFY (so the driver re-verifies the new plan)
-    and regenerate the baseline with
+    On an intentional rewrite, regenerate the baseline with
     ``SPARK_GRAFT_PLANHASH_REGEN=1 python -m pytest
     tests/test_plans.py -k fingerprints``.
 
@@ -853,8 +848,6 @@ def test_plan_fingerprints_match_baseline(
     byte-identical to how the baseline is recorded."""
     import json
     import os
-
-    from fitness_data_ingest_spark.registry import _FORCE_REVERIFY
 
     if not sf_dir.rstrip("/").endswith("sf0.001"):
         pytest.skip("baseline is recorded against sf0.001 plans")
@@ -889,10 +882,8 @@ def test_plan_fingerprints_match_baseline(
     assert not stale, f"PLANHASH.json has removed keys (regenerate): {stale}"
     moved = sorted(n for n in current if current[n] != baseline[n])
     assert not moved, (
-        f"physical plan changed for {moved} — if intentional, add these "
-        f"keys to registry._FORCE_REVERIFY and regenerate PLANHASH.json "
-        f"(SPARK_GRAFT_PLANHASH_REGEN=1); current _FORCE_REVERIFY: "
-        f"{sorted(_FORCE_REVERIFY)}"
+        f"physical plan changed for {moved} — if intentional, "
+        f"regenerate PLANHASH.json with SPARK_GRAFT_PLANHASH_REGEN=1"
     )
 
 

@@ -50,7 +50,7 @@ def main() -> int:
     out: dict[str, dict] = {}
     for key in args.keys:
         q = registry[key]
-        # warmup at the smallest SF (codegen/JIT, mirrors bench.py)
+        # warmup at the smallest SF (codegen/JIT)
         try:
             q.spark(spark, "/root/testdata/sf0.001").write.mode(
                 "overwrite"
